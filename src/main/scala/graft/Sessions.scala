@@ -50,5 +50,13 @@ object Sessions {
       .config("spark.sql.parquet.outputTimestampType", "TIMESTAMP_MICROS")
       // bucketed-table warehouse (SeriesStore tests) outside the repo
       .config("spark.sql.warehouse.dir", "/tmp/graft-warehouse")
+      // generated-class cache (JVM-wide, sized when the first class
+      // compiles). The default 100 entries sit below the working set:
+      // with constants passed as parameters (functions.ParamLiterals) a
+      // benchmark run compiles ≈260 classes (curate) and ≈270 (ingest),
+      // so at 100 the LRU evicted every class before its reuse and each
+      // query paid Janino and C2 again. Both changes together took a
+      // run from ≈1,080 (curate) and ≈740 (ingest) compiles to these.
+      .config("spark.sql.codegen.cache.maxEntries", "2048")
   }
 }

@@ -3,6 +3,8 @@ package graft.functions
 import org.apache.spark.sql.SparkSessionExtensions
 import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
+import org.apache.spark.sql.catalyst.rules.Rule
+import org.apache.spark.sql.execution.{ColumnarRule, SparkPlan}
 
 /** SparkSessionExtensions entry point: registers the engine's native
   * expressions in the session's FunctionRegistry so they are usable
@@ -14,6 +16,10 @@ import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
   * must go beyond composed built-ins: codegen expressions first
   * (like [[DotProduct]]), custom plans/strategies only if an
   * operator can't be a per-row expression.
+  *
+  * It also installs [[ParamLiterals]] as a pre-columnar-transition
+  * rule, so generated code takes primitive constants as parameters
+  * and one compiled class serves every query of the same shape.
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
   override def apply(ext: SparkSessionExtensions): Unit = {
@@ -24,5 +30,8 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
         require(children.length == 2, "dot_native(arrayA, arrayB)")
         DotProduct(children.head, children(1))
       }))
+    ext.injectColumnar(_ => new ColumnarRule {
+      override def preColumnarTransitions: Rule[SparkPlan] = ParamLiterals
+    })
   }
 }

@@ -139,6 +139,12 @@ object SeriesStore {
               fromDt: Option[String] = None,
               untilDt: Option[String] = None,
               buckets: Int = 8): Unit = {
+    // appends committed through another session (a streaming query's
+    // foreachBatch) are missing from this session's cached listing,
+    // and the overwrite below would silently drop them. Re-list in
+    // place (not catalog.refreshTable): frames already holding the
+    // cached relation then keep seeing the table once it is rewritten
+    spark.table(table).queryExecution.analyzed.refresh()
     val snap = read(spark, table, fromDt, untilDt).materialize(true)
     val prev = spark.conf.getOption("spark.sql.sources.partitionOverwriteMode")
     spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")

@@ -873,6 +873,7 @@ object TszStore {
   def compactAnnotated(spark: SparkSession, table: String,
                        buckets: Int = 8): Unit = {
     import spark.implicits._
+    spark.table(table).queryExecution.analyzed.refresh() // see compact
     val merged = spark.table(table)
       .select(col("name"), col("user_id"), col("block"), col("n"),
         col("blk"))
@@ -950,6 +951,12 @@ object TszStore {
     * be overwritten. */
   def compact(spark: SparkSession, table: String, buckets: Int = 8): Unit = {
     import spark.implicits._
+    // appends committed through another session (a streaming query's
+    // foreachBatch) are missing from this session's cached listing,
+    // and the whole-table overwrite below would silently drop them.
+    // Re-list in place (not catalog.refreshTable): frames already
+    // holding the cached relation then keep seeing the rewritten table
+    spark.table(table).queryExecution.analyzed.refresh()
     val unit = tableUnit(spark, table)
     val merged = spark.table(table)
       .select(col("name"), col("user_id"), col("block"), col("n"),

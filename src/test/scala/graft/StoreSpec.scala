@@ -1,5 +1,6 @@
 package graft
 
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.sources.SeriesStore
 import graft.tsdb.Vectors
@@ -221,6 +222,32 @@ class StoreSpec extends SparkSpec {
     SeriesStore.compact(spark, tbl, buckets = 4)
     assert(dayFiles <= 4, "compaction did not fold the streamed flushes")
     assert(SeriesStore.read(spark, tbl).count() == 900)
+  }
+
+  test("compaction keeps appends committed through another session") {
+    // a streaming query's foreachBatch appends through its own
+    // session, leaving this session's cached file listing stale: the
+    // compaction must overwrite the day from what is committed, not
+    // from that listing, or the other session's appends vanish
+    val tbl = "graft_store_other_session"
+    val base = java.sql.Timestamp.valueOf("2024-05-01 00:00:00").getTime / 1000
+    def rows(s: SparkSession, from: Long, until: Long): DataFrame =
+      s.range(from, until).select(
+        concat(lit("m"), (col("id") % 3).cast("string")).as("name"),
+        (col("id") % 3).as("user_id"),
+        timestamp_seconds(lit(base) + col("id") * 60).as("ts"),
+        (col("id") % 97).cast("double").as("value"),
+        col("id").as("event_id"))
+    def perSeries(df: DataFrame) = df.groupBy("name", "user_id")
+      .agg(count(lit(1)), sum("value")).collect()
+      .map(r => (r.getString(0), r.getLong(1)) -> (r.getLong(2), r.getDouble(3)))
+      .toMap
+    SeriesStore.write(rows(spark, 0, 600), tbl, buckets = 4)
+    assert(SeriesStore.read(spark, tbl).count() == 600) // lists the day
+    SeriesStore.appendBatch(rows(spark.newSession(), 600, 1200), tbl, buckets = 4)
+    SeriesStore.compact(spark, tbl, buckets = 4)
+    assert(perSeries(SeriesStore.read(spark, tbl)) == perSeries(rows(spark, 0, 1200)),
+      "compaction dropped rows appended through another session")
   }
 
   test("corpus store writes split-partitioned, shard-disjoint ordered files") {

@@ -1,6 +1,7 @@
 package graft
 
 import java.sql.Timestamp
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.sources.{Tsz, TszStore}
 import graft.tsdb.Temporal
@@ -165,6 +166,41 @@ class TszSpec extends SparkSpec {
       .collect().map(_.getLong(3))
     assert(counts.forall(_ == 1L), "compaction must fold to one blob per key")
     assert(pts() == before, "compaction must preserve the point set")
+  }
+
+  test("compaction keeps appends committed through another session") {
+    // appends through another session (a streaming query's
+    // foreachBatch) leave this session's cached listing stale; both
+    // compactions overwrite the whole table, so they must snapshot
+    // what is committed or silently drop those appends
+    def rows(s: SparkSession, from: Long, until: Long): DataFrame =
+      s.range(from, until).select(
+        concat(lit("m"), (col("id") % 3).cast("string")).as("name"),
+        (col("id") % 3).as("user_id"),
+        timestamp_seconds(lit(1714521600L) + col("id") * 60).as("ts"),
+        (col("id") % 97).cast("double").as("value"),
+        lit("a").as("annotation"))
+    def perSeries(df: DataFrame) = df.groupBy("name", "user_id")
+      .agg(count(lit(1)), sum("value")).collect()
+      .map(r => (r.getString(0), r.getLong(1)) -> (r.getLong(2), r.getDouble(3)))
+      .toMap
+    val want = perSeries(rows(spark, 0, 1200))
+    for (annotated <- Seq(false, true)) {
+      val t = s"graft_tsz_other_session_$annotated"
+      spark.sql(s"DROP TABLE IF EXISTS `$t`")
+      def append(df: DataFrame): Unit =
+        if (annotated) TszStore.appendBatchAnnotated(df, t)
+        else TszStore.appendBatch(df.drop("annotation"), t)
+      def decoded: DataFrame =
+        if (annotated) TszStore.decodeAnnotated(spark.table(t))
+        else TszStore.readDecoded(spark, t)
+      append(rows(spark, 0, 600))
+      assert(decoded.count() == 600) // lists the table's files
+      append(rows(spark.newSession(), 600, 1200))
+      if (annotated) TszStore.compactAnnotated(spark, t) else TszStore.compact(spark, t)
+      assert(perSeries(decoded) == want,
+        s"compaction (annotated=$annotated) dropped another session's appends")
+    }
   }
 
   test("store round-trips the sf sample stream through parquet blocks") {
