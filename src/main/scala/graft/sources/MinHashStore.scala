@@ -46,41 +46,31 @@ object MinHashStore {
   private val PropN = "graft.mh.n"
   private val PropBuckets = "graft.mh.buckets"
 
-  private def dropTable(spark: SparkSession, table: String): Unit = {
-    spark.sql(s"DROP TABLE IF EXISTS `$table`")
-    val loc = new org.apache.hadoop.fs.Path(
-      spark.conf.get("spark.sql.warehouse.dir"), table)
-    val fs = loc.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (fs.exists(loc)) fs.delete(loc, true)
-  }
+  /** Postings bucketed by `bucket`, signatures by `doc_id`. */
+  private def postingsLayout(buckets: Int) =
+    Warehouse.Layout(buckets = buckets, bucketBy = Seq("bucket"))
+  private def sigsLayout(buckets: Int) =
+    Warehouse.Layout(buckets = buckets, bucketBy = Seq("doc_id"))
 
   /** Index a corpus: signatures once, banded postings with
     * build-time bucket sizes, both written bucketed on their join
     * keys. */
   def build(docs: DataFrame, table: String, k: Int = 16, bands: Int = 8,
             rows: Int = 2, n: Int = 3, buckets: Int = 8): Unit = {
-    val spark = docs.sparkSession
-    dropTable(spark, table); dropTable(spark, table + "_sigs")
     val sigs = Dedup.minhashSignature(docs, k, n).materialize(true)
-    sigs.write.mode("overwrite")
-      .bucketBy(buckets, "doc_id")
-      .format("parquet").saveAsTable(table + "_sigs")
-    Dedup.bandedBuckets(sigs, bands, rows)
-      .withColumn("bsz",
-        count(lit(1)).over(Window.partitionBy("band", "bucket")))
-      .write.mode("overwrite")
-      .bucketBy(buckets, "bucket")
-      .format("parquet").saveAsTable(table)
-    spark.sql(s"ALTER TABLE `$table` SET TBLPROPERTIES(" +
-      s"'$PropK'='$k', '$PropBands'='$bands', '$PropRows'='$rows', " +
-      s"'$PropN'='$n', '$PropBuckets'='$buckets')")
+    Warehouse.create(sigs, table + "_sigs", sigsLayout(buckets))
+    Warehouse.create(
+      Dedup.bandedBuckets(sigs, bands, rows)
+        .withColumn("bsz",
+          count(lit(1)).over(Window.partitionBy("band", "bucket"))),
+      table, postingsLayout(buckets),
+      Map(PropK -> k, PropBands -> bands, PropRows -> rows, PropN -> n,
+        PropBuckets -> buckets))
   }
 
   private def props(spark: SparkSession,
                     table: String): (Int, Int, Int, Int, Int) = {
-    val p = spark.sessionState.catalog
-      .getTableMetadata(org.apache.spark.sql.catalyst.TableIdentifier(table))
-      .properties
+    val p = Warehouse.properties(spark, table)
     (p(PropK).toInt, p(PropBands).toInt, p(PropRows).toInt, p(PropN).toInt,
       p(PropBuckets).toInt)
   }
@@ -125,16 +115,11 @@ object MinHashStore {
     val spark = batch.sparkSession
     val (k, bands, rows, n, buckets) = props(spark, table)
     val sigs = Dedup.minhashSignature(batch, k, n).materialize(true)
-    // bucketBy + saveAsTable(append): the bucketed-append path
-    // SeriesStore.appendBatch uses — readers keep the bucket
-    // distribution across appended files
-    sigs.write.mode("append")
-      .bucketBy(buckets, "doc_id")
-      .format("parquet").saveAsTable(table + "_sigs")
-    Dedup.bandedBuckets(sigs, bands, rows)
-      .withColumn("bsz", lit(1L))
-      .write.mode("append")
-      .bucketBy(buckets, "bucket")
-      .format("parquet").saveAsTable(table)
+    // the bucketed-append path SeriesStore.appendBatch uses — readers
+    // keep the bucket distribution across appended files
+    Warehouse.append(sigs, table + "_sigs", sigsLayout(buckets))
+    Warehouse.append(
+      Dedup.bandedBuckets(sigs, bands, rows).withColumn("bsz", lit(1L)),
+      table, postingsLayout(buckets))
   }
 }

@@ -1,7 +1,5 @@
 package graft.sources
 
-import graft.Materialize.MatOps
-
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -584,71 +582,48 @@ object ProtoStore {
   }
 
   /** Append one micro-batch as encoded message blocks (the TszStore
-    * lifecycle: a (series, day) split across batches lands multiple
-    * blobs under one key; [[decode]] unions them, [[compact]] folds
-    * back to one). */
-  def appendBatch(batch: DataFrame, table: String, buckets: Int = 8): Unit = {
-    val spark = batch.sparkSession
-    val exists = spark.catalog.tableExists(table)
-    if (!exists) {
-      val loc = new org.apache.hadoop.fs.Path(
-        spark.conf.get("spark.sql.warehouse.dir"), table)
-      val fs = loc.getFileSystem(spark.sparkContext.hadoopConfiguration)
-      if (fs.exists(loc)) fs.delete(loc, true)
-    }
-    val mode = if (exists) "append" else "errorifexists"
-    blockFrame(batch).write.mode(mode)
-      .bucketBy(buckets, "name", "user_id")
-      .sortBy("name", "user_id", "block")
-      .format("parquet")
-      .saveAsTable(table)
-  }
+    * lifecycle and layout: a (series, day) split across batches lands
+    * multiple blobs under one key; [[decode]] unions them,
+    * [[compact]] folds back to one). */
+  def appendBatch(batch: DataFrame, table: String, buckets: Int = 8): Unit =
+    Warehouse.append(blockFrame(batch), table, TszStore.layout(buckets))
 
   /** Continuous structured-message ingest: each micro-batch encodes
     * and appends its blocks (exactly-once per batch under the
     * checkpoint). */
   def streamWrite(msgs: DataFrame, table: String, checkpoint: String,
                   buckets: Int = 8): org.apache.spark.sql.streaming.StreamingQuery =
-    msgs.writeStream
-      .option("checkpointLocation", checkpoint)
-      .outputMode("append")
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        appendBatch(batch, table, buckets)
-      }
-      .start()
+    Warehouse.stream(msgs, checkpoint)(appendBatch(_, table, buckets))
 
   /** Fold each (series, day) key's blobs back to ONE blob — decode,
     * merge in (ts, amount, qty, label, flag) order (the point SET is
     * preserved exactly; only intra-timestamp byte order can move),
-    * re-encode under the fixed message schema. */
+    * re-encode under the fixed message schema, and rewrite the table
+    * through [[Warehouse.rewrite]]. */
   def compact(spark: SparkSession, table: String, buckets: Int = 8): Unit = {
     import spark.implicits._
-    val merged = spark.table(table)
-      .select(col("name"), col("user_id"), col("block"), col("n"),
-        col("blk"))
-      .as[(String, Long, Long, Int, Array[Byte])]
-      .groupByKey(t => (t._1, t._2, t._3))
-      .mapGroups { (key: (String, Long, Long),
-                    it: Iterator[(String, Long, Long, Int, Array[Byte])]) =>
-        val pts = it.flatMap(t => ProtoTsz.decodeStream(schema, t._5, t._4))
-          .toArray
-          .sortBy(p => (p._1, p._2(0).asInstanceOf[Double],
-            p._2(1).asInstanceOf[Long],
-            new String(p._2(2).asInstanceOf[Array[Byte]],
-              java.nio.charset.StandardCharsets.UTF_8)))
-        val (bytes, st) = ProtoTsz.encodeStream(schema, pts)
-        (key._1, key._2, key._3, pts.length, bytes,
-          st.tsBits, st.dblBits, st.intBits, st.bytesBits, st.boolBits,
-          st.bytesNew, st.bytesIdxHits, st.bytesNoChange, st.intNoChange)
-      }
-      .toDF("name", "user_id", "block", "n", "blk",
-        "ts_bits", "dbl_bits", "int_bits", "bytes_bits", "bool_bits",
-        "bytes_new", "bytes_idx_hits", "bytes_nochange", "int_nochange")
-      .materialize(true)
-    val cols = spark.table(table).columns
-    merged.repartition(buckets, col("name"), col("user_id"))
-      .select(cols.map(col): _*)
-      .write.mode("overwrite").insertInto(table)
+    Warehouse.rewrite(spark, table, TszStore.layout(buckets)) { blocks =>
+      blocks.select(col("name"), col("user_id"), col("block"), col("n"),
+          col("blk"))
+        .as[(String, Long, Long, Int, Array[Byte])]
+        .groupByKey(t => (t._1, t._2, t._3))
+        .mapGroups { (key: (String, Long, Long),
+                      it: Iterator[(String, Long, Long, Int, Array[Byte])]) =>
+          val pts = it.flatMap(t => ProtoTsz.decodeStream(schema, t._5, t._4))
+            .toArray
+            .sortBy(p => (p._1, p._2(0).asInstanceOf[Double],
+              p._2(1).asInstanceOf[Long],
+              new String(p._2(2).asInstanceOf[Array[Byte]],
+                java.nio.charset.StandardCharsets.UTF_8)))
+          val (bytes, st) = ProtoTsz.encodeStream(schema, pts)
+          (key._1, key._2, key._3, pts.length, bytes,
+            st.tsBits, st.dblBits, st.intBits, st.bytesBits, st.boolBits,
+            st.bytesNew, st.bytesIdxHits, st.bytesNoChange, st.intNoChange)
+        }
+        .toDF("name", "user_id", "block", "n", "blk",
+          "ts_bits", "dbl_bits", "int_bits", "bytes_bits", "bool_bits",
+          "bytes_new", "bytes_idx_hits", "bytes_nochange", "int_nochange")
+    }
   }
 
   /** Decode back to (name, user_id, ts, amount, qty, label, flag). */

@@ -1,7 +1,5 @@
 package graft.sources
 
-import graft.Materialize.MatOps
-
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -43,21 +41,6 @@ import org.apache.spark.sql.functions._
   */
 object SeriesStore {
 
-  /** Bucket count sized to the sample volume — one bucket per ~250k
-    * samples, clamped to [8, 1024]. The bucket count is the table's
-    * permanent read parallelism (the zero-exchange property hands
-    * the bucket distribution straight to every per-series operator,
-    * so there is no AQE re-split downstream): too few buckets caps
-    * the whole query at that width forever. 10× data at a fixed 8
-    * buckets measured 5× wall-clock on the bucketed rollup — the
-    * definition of a silent scale cliff; sizing at creation keeps
-    * per-bucket volume flat as the corpus grows. At the 100 TB
-    * design point the clamp lands on 1024 — the ≈270 MB/(day,
-    * bucket) sizing in the layout comment above. Costs one
-    * metadata-cheap count at table creation. */
-  def sizedBuckets(samples: DataFrame): Int =
-    math.min(1024L, math.max(8L, samples.count() / 250000L)).toInt
-
   /** Choose (buckets, dt granularity) from the sample volume — the
     * analogue of m3db's per-namespace block-size configuration
     * (/root/reference/src/dbnode/storage/namespace — hot namespaces
@@ -91,80 +74,39 @@ object SeriesStore {
   /** Table property recording the dt granularity for [[read]]. */
   private val GranularityProp = "graft.dt.granularity"
 
+  /** dt partitions, series buckets, (series, ts) order in each. */
+  private def layout(buckets: Int) = Warehouse.Layout(
+    partitionBy = Seq("dt"), buckets = buckets,
+    bucketBy = Seq("name", "user_id"), sortBy = Seq("name", "user_id", "ts"))
+
   /** Write a sample frame (name, user_id, ts, value, event_id) as a
-    * dt-partitioned, series-bucketed table. Idempotent: drops a
-    * stale catalog entry AND any orphaned warehouse location (a
-    * fresh in-memory catalog does not know about directories a
-    * previous session left behind, and CTAS refuses to reuse them).
-    * `granularity` (day/month/year, see [[layoutFor]]) sets the dt
-    * partition key's resolution and is recorded on the table so
-    * readers floor their bounds to it. */
+    * dt-partitioned, series-bucketed table. Idempotent
+    * ([[Warehouse.create]]). `granularity` (day/month/year, see
+    * [[layoutFor]]) sets the dt partition key's resolution and is
+    * recorded on the table so readers floor their bounds to it. */
   def write(samples: DataFrame, table: String, buckets: Int = 8,
-            granularity: String = "day"): Unit = {
-    val spark = samples.sparkSession
-    spark.sql(s"DROP TABLE IF EXISTS `$table`")
-    val loc = new org.apache.hadoop.fs.Path(
-      spark.conf.get("spark.sql.warehouse.dir"), table)
-    val fs = loc.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (fs.exists(loc)) fs.delete(loc, true)
-    samples
-      .withColumn("dt", to_date(date_trunc(granularity, col("ts"))))
-      .write.mode("overwrite")
-      .partitionBy("dt")
-      .bucketBy(buckets, "name", "user_id")
-      .sortBy("name", "user_id", "ts")
-      .format("parquet")
-      .saveAsTable(table)
-    spark.sql(
-      s"ALTER TABLE `$table` SET TBLPROPERTIES('$GranularityProp'='$granularity')")
-  }
+            granularity: String = "day"): Unit =
+    Warehouse.create(
+      samples.withColumn("dt", to_date(date_trunc(granularity, col("ts")))),
+      table, layout(buckets), Map(GranularityProp -> granularity))
 
   /** Compact a dt range in place — the analogue of m3db's background
-    * compaction (/root/reference/src/dbnode/storage/compaction): a
-    * long-running ingest lands many small files per (day, bucket)
-    * (one per writing task per batch); compaction rewrites each
-    * touched day to exactly ONE file per bucket, time-sorted.
-    *
-    * Mechanics: snapshot the range (localCheckpoint truncates the
-    * lineage so Spark allows overwriting the table being read),
-    * then `repartition(buckets, name, user_id)` — the SAME
-    * murmur3-pmod assignment bucketing uses, so every task holds
-    * exactly one bucket's rows and writes exactly one file — and
-    * dynamic partition overwrite replaces only the touched days.
-    * Readers keep the bucket distribution (zero-exchange per-series
-    * ops) and gain back the row-group stats a fragmented layout
-    * erodes. StoreSpec measures: files per day collapse to
-    * `buckets`, rows byte-identical, reads still exchange-free. */
+    * compaction (dbnode storage/compaction): a long-running ingest
+    * lands many small files per (day, bucket) (one per writing task
+    * per batch); compaction rewrites each touched day to exactly ONE
+    * file per bucket, time-sorted, through [[Warehouse.rewrite]]
+    * (re-list, snapshot, repartition by the bucket key, dynamic
+    * overwrite of only the touched days). Readers keep the bucket
+    * distribution (zero-exchange per-series ops) and gain back the
+    * row-group stats a fragmented layout erodes. StoreSpec measures:
+    * files per day collapse to `buckets`, rows byte-identical, reads
+    * still exchange-free. */
   def compact(spark: SparkSession, table: String,
               fromDt: Option[String] = None,
               untilDt: Option[String] = None,
-              buckets: Int = 8): Unit = {
-    // appends committed through another session (a streaming query's
-    // foreachBatch) are missing from this session's cached listing,
-    // and the overwrite below would silently drop them. Re-list in
-    // place (not catalog.refreshTable): frames already holding the
-    // cached relation then keep seeing the table once it is rewritten
-    spark.table(table).queryExecution.analyzed.refresh()
-    val snap = read(spark, table, fromDt, untilDt).materialize(true)
-    val prev = spark.conf.getOption("spark.sql.sources.partitionOverwriteMode")
-    spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-    try {
-      val cols = spark.table(table).columns // insertInto is positional
-      // no manual sort: a partitioned+bucketed insert REQUIRES
-      // ordering (dt, bucket-id, name, user_id, ts) and the write
-      // path adds that sort itself — the table's sortBy metadata is
-      // what produces the time-sorted files
-      snap
-        .repartition(buckets, col("name"), col("user_id"))
-        .select(cols.map(col): _*)
-        .write.mode("overwrite").insertInto(table)
-    } finally {
-      prev match {
-        case Some(v) => spark.conf.set("spark.sql.sources.partitionOverwriteMode", v)
-        case None => spark.conf.unset("spark.sql.sources.partitionOverwriteMode")
-      }
-    }
-  }
+              buckets: Int = 8): Unit =
+    Warehouse.rewrite(spark, table, layout(buckets))(
+      inRange(_, table, fromDt, untilDt))
 
   /** Read the table back; `fromDt`/`untilDt` bound the partitions
     * read ([from, until) on the dt= key — prunes at planning time).
@@ -174,43 +116,26 @@ object SeriesStore {
     * bound is the caller's ts predicate, as in store_fetch). */
   def read(spark: SparkSession, table: String,
            fromDt: Option[String] = None,
-           untilDt: Option[String] = None): DataFrame = {
-    val gran = spark.sessionState.catalog
-      .getTableMetadata(org.apache.spark.sql.catalyst.TableIdentifier(table))
-      .properties.getOrElse(GranularityProp, "day")
-    val t = spark.table(table)
-    val bounded = Seq(
+           untilDt: Option[String] = None): DataFrame =
+    inRange(spark.table(table), table, fromDt, untilDt)
+
+  private def inRange(t: DataFrame, table: String, fromDt: Option[String],
+                      untilDt: Option[String]): DataFrame = {
+    val gran = Warehouse.properties(t.sparkSession, table)
+      .getOrElse(GranularityProp, "day")
+    Seq(
       fromDt.map(d => col("dt") >= to_date(date_trunc(gran, lit(d)))),
       untilDt.map(d => col("dt") < lit(d))).flatten
-    bounded.foldLeft(t)((df, p) => df.where(p))
+      .foldLeft(t)((df, p) => df.where(p))
   }
 
   /** Append one micro-batch to the layout (creating the table on the
     * first batch): same dt partitioning, bucket hash and in-bucket
     * time sort as [[write]], so readers keep zero-exchange
     * per-series plans across appended data. */
-  def appendBatch(batch: DataFrame, table: String, buckets: Int = 8): Unit = {
-    val spark = batch.sparkSession
-    val withDt = batch.withColumn("dt", to_date(col("ts")))
-    val exists = spark.catalog.tableExists(table)
-    if (!exists) {
-      // a location left behind without a metastore entry (a prior
-      // JVM's warehouse) is unreadable garbage — clear it so the
-      // create succeeds, same as [[write]]; an EXISTING table is
-      // never touched (restart-append relies on it)
-      val loc = new org.apache.hadoop.fs.Path(
-        spark.conf.get("spark.sql.warehouse.dir"), table)
-      val fs = loc.getFileSystem(spark.sparkContext.hadoopConfiguration)
-      if (fs.exists(loc)) fs.delete(loc, true)
-    }
-    val mode = if (exists) "append" else "errorifexists"
-    withDt.write.mode(mode)
-      .partitionBy("dt")
-      .bucketBy(buckets, "name", "user_id")
-      .sortBy("name", "user_id", "ts")
-      .format("parquet")
-      .saveAsTable(table)
-  }
+  def appendBatch(batch: DataFrame, table: String, buckets: Int = 8): Unit =
+    Warehouse.append(batch.withColumn("dt", to_date(col("ts"))), table,
+      layout(buckets))
 
   /** Continuous ingest into the bucketed layout — m3db's commit-log →
     * flush path restated over Structured Streaming: each micro-batch
@@ -222,11 +147,5 @@ object SeriesStore {
   def streamWrite(samples: DataFrame, table: String,
                   checkpoint: String,
                   buckets: Int = 8): org.apache.spark.sql.streaming.StreamingQuery =
-    samples.writeStream
-      .option("checkpointLocation", checkpoint)
-      .outputMode("append")
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        appendBatch(batch, table, buckets)
-      }
-      .start()
+    Warehouse.stream(samples, checkpoint)(appendBatch(_, table, buckets))
 }

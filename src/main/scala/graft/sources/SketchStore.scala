@@ -26,33 +26,23 @@ import graft.pipeline.Sketches
   */
 object SketchStore {
 
-  private def dropTable(spark: SparkSession, table: String): Unit = {
-    spark.sql(s"DROP TABLE IF EXISTS `$table`")
-    val loc = new org.apache.hadoop.fs.Path(
-      spark.conf.get("spark.sql.warehouse.dir"), table)
-    val fs = loc.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (fs.exists(loc)) fs.delete(loc, true)
-  }
+  private val HllLayout = Warehouse.Layout(partitionBy = Seq("source"))
 
   /** Build the register table from a corpus. */
-  def build(docs: DataFrame, table: String): Unit = {
-    val spark = docs.sparkSession
-    dropTable(spark, table)
-    Sketches.hllRegisters(docs)
-      .write.mode("overwrite").partitionBy("source")
-      .format("parquet").saveAsTable(table)
-  }
+  def build(docs: DataFrame, table: String): Unit =
+    Warehouse.create(Sketches.hllRegisters(docs), table, HllLayout)
 
   /** Fold a new batch in: a blind row append — max-merge happens at
     * read, so appending never reads history. */
   def append(docs: DataFrame, table: String): Unit =
-    Sketches.hllRegisters(docs)
-      .write.mode("append").partitionBy("source")
-      .format("parquet").saveAsTable(table)
+    Warehouse.append(Sketches.hllRegisters(docs), table, HllLayout)
+
+  private def maxMerge(rows: DataFrame): DataFrame =
+    rows.groupBy("source", "idx").agg(max("mj").as("mj"))
 
   /** The merged register view (max over appended rows). */
   def registers(spark: SparkSession, table: String): DataFrame =
-    spark.table(table).groupBy("source", "idx").agg(max("mj").as("mj"))
+    maxMerge(spark.table(table))
 
   /** Estimate from the STORED registers — byte-identical to the
     * direct [[Sketches.hllDistinct]] when the table holds the same
@@ -65,11 +55,8 @@ object SketchStore {
 
   /** In-place compaction: fold appended duplicate registers back to
     * ≤m rows per source. */
-  def compact(spark: SparkSession, table: String): Unit = {
-    val folded = registers(spark, table).materialize(true)
-    folded.write.mode("overwrite").partitionBy("source")
-      .format("parquet").saveAsTable(table)
-  }
+  def compact(spark: SparkSession, table: String): Unit =
+    Warehouse.rewrite(spark, table, HllLayout)(maxMerge)
 
   // ---- persisted DDSketch cells (the SUM-mergeable sibling) ----
   //
@@ -79,25 +66,23 @@ object SketchStore {
   // of events, exactly a counter's semantics). Appends stay blind
   // row appends; reads sum; compaction folds to ≤cap rows per type.
 
+  private val DdLayout = Warehouse.Layout(partitionBy = Seq("event_type"))
+
   /** Build the DDSketch cell table from an event batch. */
-  def buildDd(events: DataFrame, table: String): Unit = {
-    val spark = events.sparkSession
-    dropTable(spark, table)
-    Sketches.ddBuckets(events)
-      .write.mode("overwrite").partitionBy("event_type")
-      .format("parquet").saveAsTable(table)
-  }
+  def buildDd(events: DataFrame, table: String): Unit =
+    Warehouse.create(Sketches.ddBuckets(events), table, DdLayout)
 
   /** Fold a new event batch in: a blind row append — counts
     * sum-merge at read, so appending never reads history. */
   def appendDd(events: DataFrame, table: String): Unit =
-    Sketches.ddBuckets(events)
-      .write.mode("append").partitionBy("event_type")
-      .format("parquet").saveAsTable(table)
+    Warehouse.append(Sketches.ddBuckets(events), table, DdLayout)
+
+  private def sumMerge(rows: DataFrame): DataFrame =
+    rows.groupBy("event_type", "i").agg(sum("c").as("c"))
 
   /** The merged cell view (sum over appended rows). */
   def ddCells(spark: SparkSession, table: String): DataFrame =
-    spark.table(table).groupBy("event_type", "i").agg(sum("c").as("c"))
+    sumMerge(spark.table(table))
 
   /** Quantiles from the STORED cells — byte-identical to the direct
     * [[Sketches.ddSketch]] when the table holds the same events
@@ -110,11 +95,8 @@ object SketchStore {
 
   /** In-place compaction: fold appended duplicate cells back to one
     * row per (type, bucket). */
-  def compactDd(spark: SparkSession, table: String): Unit = {
-    val folded = ddCells(spark, table).materialize(true)
-    folded.write.mode("overwrite").partitionBy("event_type")
-      .format("parquet").saveAsTable(table)
-  }
+  def compactDd(spark: SparkSession, table: String): Unit =
+    Warehouse.rewrite(spark, table, DdLayout)(sumMerge)
 
   // ---- persisted repetition-spectrum sketch cells ----
   //
@@ -131,28 +113,28 @@ object SketchStore {
   // sum-merged kinds (batch semantics, like the DD cells) — dedup
   // of batches belongs to the ingest layer.
 
+  private val SpectrumLayout = Warehouse.Layout(partitionBy = Seq("kind"))
+
   /** Build the spectrum cell table from a corpus batch. */
-  def buildSpectrum(docs: DataFrame, table: String): Unit = {
-    val spark = docs.sparkSession
-    dropTable(spark, table)
-    graft.pipeline.Dedup.spectrumCells(docs)
-      .write.mode("overwrite").partitionBy("kind")
-      .format("parquet").saveAsTable(table)
-  }
+  def buildSpectrum(docs: DataFrame, table: String): Unit =
+    Warehouse.create(graft.pipeline.Dedup.spectrumCells(docs), table,
+      SpectrumLayout)
 
   /** Fold a new doc batch in: blind row append, merge at read. */
   def appendSpectrum(docs: DataFrame, table: String): Unit =
-    graft.pipeline.Dedup.spectrumCells(docs)
-      .write.mode("append").partitionBy("kind")
-      .format("parquet").saveAsTable(table)
+    Warehouse.append(graft.pipeline.Dedup.spectrumCells(docs), table,
+      SpectrumLayout)
+
+  private def cellMerge(rows: DataFrame): DataFrame =
+    rows.groupBy("kind", "depth", "k")
+      .agg(max("vmax").as("vmax"), sum("vsum").as("vsum"))
 
   /** The merged cell view: cells merge with cells by the same
     * per-kind algebra the builders use — associative, so
     * append-then-merge equals the one-shot batch walk
     * bit-for-bit. */
   def spectrumCells(spark: SparkSession, table: String): DataFrame =
-    spark.table(table).groupBy("kind", "depth", "k")
-      .agg(max("vmax").as("vmax"), sum("vsum").as("vsum"))
+    cellMerge(spark.table(table))
 
   /** The 7-row spectrum from the STORED cells — byte-identical to
     * the direct [[graft.pipeline.Dedup.suffixSpectrumSketch]] when
@@ -169,9 +151,6 @@ object SketchStore {
 
   /** In-place compaction: fold appended duplicate cells back to one
     * row per (kind, depth, k). */
-  def compactSpectrum(spark: SparkSession, table: String): Unit = {
-    val folded = spectrumCells(spark, table).materialize(true)
-    folded.write.mode("overwrite").partitionBy("kind")
-      .format("parquet").saveAsTable(table)
-  }
+  def compactSpectrum(spark: SparkSession, table: String): Unit =
+    Warehouse.rewrite(spark, table, SpectrumLayout)(cellMerge)
 }

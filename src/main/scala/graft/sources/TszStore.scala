@@ -1,7 +1,5 @@
 package graft.sources
 
-import graft.Materialize.MatOps
-
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -805,64 +803,30 @@ object TszStore {
       .drop("ts_us")
   }
 
-  /** Persist the block frame, bucketed by series (idempotent —
-    * SeriesStore's drop-table-and-location discipline). The time
-    * unit rides as a table property so readers pick the scheme up
-    * without out-of-band state. */
+  /** Series buckets, (series, block) order in each — shared by
+    * [[ProtoStore]]'s message blocks. */
+  private[sources] def layout(buckets: Int) = Warehouse.Layout(
+    buckets = buckets, bucketBy = Seq("name", "user_id"),
+    sortBy = Seq("name", "user_id", "block"))
+
+  /** Persist the block frame, bucketed by series (idempotent,
+    * [[Warehouse.create]]). The time unit rides as a table property
+    * so readers pick the scheme up without out-of-band state. */
   def write(samples: DataFrame, table: String, buckets: Int = 8,
-            unit: TszTimeUnit = TszTimeUnit.Microsecond): Unit = {
-    val spark = samples.sparkSession
-    spark.sql(s"DROP TABLE IF EXISTS `$table`")
-    val loc = new org.apache.hadoop.fs.Path(
-      spark.conf.get("spark.sql.warehouse.dir"), table)
-    val fs = loc.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (fs.exists(loc)) fs.delete(loc, true)
-    blockFrame(samples, unit)
-      .write.mode("overwrite")
-      .bucketBy(buckets, "name", "user_id")
-      .sortBy("name", "user_id", "block")
-      .format("parquet")
-      .saveAsTable(table)
-    spark.sql(
-      s"ALTER TABLE `$table` SET TBLPROPERTIES('$TimeUnitProp'='${unit.name}')")
-  }
+            unit: TszTimeUnit = TszTimeUnit.Microsecond): Unit =
+    Warehouse.create(blockFrame(samples, unit), table, layout(buckets),
+      Map(TimeUnitProp -> unit.name))
 
   /** Persist an [[annotatedBlockFrame]] (same discipline as
     * [[write]]). */
   def writeAnnotated(samples: DataFrame, table: String,
-                     buckets: Int = 8): Unit = {
-    val spark = samples.sparkSession
-    spark.sql(s"DROP TABLE IF EXISTS `$table`")
-    val loc = new org.apache.hadoop.fs.Path(
-      spark.conf.get("spark.sql.warehouse.dir"), table)
-    val fs = loc.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (fs.exists(loc)) fs.delete(loc, true)
-    annotatedBlockFrame(samples)
-      .write.mode("overwrite")
-      .bucketBy(buckets, "name", "user_id")
-      .sortBy("name", "user_id", "block")
-      .format("parquet")
-      .saveAsTable(table)
-  }
+                     buckets: Int = 8): Unit =
+    Warehouse.create(annotatedBlockFrame(samples), table, layout(buckets))
 
   /** Append one annotated micro-batch (the [[appendBatch]] twin). */
   def appendBatchAnnotated(batch: DataFrame, table: String,
-                           buckets: Int = 8): Unit = {
-    val spark = batch.sparkSession
-    val exists = spark.catalog.tableExists(table)
-    if (!exists) {
-      val loc = new org.apache.hadoop.fs.Path(
-        spark.conf.get("spark.sql.warehouse.dir"), table)
-      val fs = loc.getFileSystem(spark.sparkContext.hadoopConfiguration)
-      if (fs.exists(loc)) fs.delete(loc, true)
-    }
-    val mode = if (exists) "append" else "errorifexists"
-    annotatedBlockFrame(batch).write.mode(mode)
-      .bucketBy(buckets, "name", "user_id")
-      .sortBy("name", "user_id", "block")
-      .format("parquet")
-      .saveAsTable(table)
-  }
+                           buckets: Int = 8): Unit =
+    Warehouse.append(annotatedBlockFrame(batch), table, layout(buckets))
 
   /** [[compact]] for annotated tables: each decoded point carries
     * its prevailing annotation into the merge, and the re-encode's
@@ -873,109 +837,72 @@ object TszStore {
   def compactAnnotated(spark: SparkSession, table: String,
                        buckets: Int = 8): Unit = {
     import spark.implicits._
-    spark.table(table).queryExecution.analyzed.refresh() // see compact
-    val merged = spark.table(table)
-      .select(col("name"), col("user_id"), col("block"), col("n"),
-        col("blk"))
-      .as[(String, Long, Long, Int, Array[Byte])]
-      .groupByKey(t => (t._1, t._2, t._3))
-      .mapGroups { (key: (String, Long, Long),
-                    it: Iterator[(String, Long, Long, Int, Array[Byte])]) =>
-        val pts = it.flatMap(t => Tsz.decodeBlockAnnotated(t._5, t._4))
-          .toArray.sortBy(p => (p._1, p._2))
-        val (bytes, tsBits, valBits, antBits) =
-          Tsz.encodeBlockAnnotated(pts.map(p => (p._1, p._2)), pts.map(_._3))
-        (key._1, key._2, key._3, pts.length, tsBits, valBits, antBits, bytes)
-      }
-      .toDF("name", "user_id", "block", "n", "ts_bits", "val_bits",
-        "ant_bits", "blk")
-      .materialize(true)
-    val cols = spark.table(table).columns
-    merged.repartition(buckets, col("name"), col("user_id"))
-      .select(cols.map(col): _*)
-      .write.mode("overwrite").insertInto(table)
+    Warehouse.rewrite(spark, table, layout(buckets)) { blocks =>
+      blocks.select(col("name"), col("user_id"), col("block"), col("n"),
+          col("blk"))
+        .as[(String, Long, Long, Int, Array[Byte])]
+        .groupByKey(t => (t._1, t._2, t._3))
+        .mapGroups { (key: (String, Long, Long),
+                      it: Iterator[(String, Long, Long, Int, Array[Byte])]) =>
+          val pts = it.flatMap(t => Tsz.decodeBlockAnnotated(t._5, t._4))
+            .toArray.sortBy(p => (p._1, p._2))
+          val (bytes, tsBits, valBits, antBits) =
+            Tsz.encodeBlockAnnotated(pts.map(p => (p._1, p._2)), pts.map(_._3))
+          (key._1, key._2, key._3, pts.length, tsBits, valBits, antBits, bytes)
+        }
+        .toDF("name", "user_id", "block", "n", "ts_bits", "val_bits",
+          "ant_bits", "blk")
+    }
   }
 
-  /** Append one micro-batch as encoded blocks. A (series, day) split
-    * across micro-batches lands MULTIPLE blobs under one block key —
-    * m3db's pre-compaction block versions; [[readDecoded]] decodes
-    * and unions all of them, [[compact]] folds each key back to one
-    * blob. */
   /** The table's persisted scheme, or the Microsecond default when
     * the table (or property) doesn't exist yet. */
   private def tableUnit(spark: SparkSession, table: String): TszTimeUnit =
     if (!spark.catalog.tableExists(table)) TszTimeUnit.Microsecond
-    else TszTimeUnit.of(spark.sessionState.catalog
-      .getTableMetadata(org.apache.spark.sql.catalyst.TableIdentifier(table))
-      .properties.getOrElse(TimeUnitProp, TszTimeUnit.Microsecond.name))
+    else TszTimeUnit.of(Warehouse.properties(spark, table)
+      .getOrElse(TimeUnitProp, TszTimeUnit.Microsecond.name))
 
-  def appendBatch(batch: DataFrame, table: String, buckets: Int = 8): Unit = {
-    val spark = batch.sparkSession
-    val exists = spark.catalog.tableExists(table)
-    // appended blocks must use the TABLE's scheme, not a caller guess
-    val unit = tableUnit(spark, table)
-    if (!exists) {
-      val loc = new org.apache.hadoop.fs.Path(
-        spark.conf.get("spark.sql.warehouse.dir"), table)
-      val fs = loc.getFileSystem(spark.sparkContext.hadoopConfiguration)
-      if (fs.exists(loc)) fs.delete(loc, true)
-    }
-    val mode = if (exists) "append" else "errorifexists"
-    blockFrame(batch, unit).write.mode(mode)
-      .bucketBy(buckets, "name", "user_id")
-      .sortBy("name", "user_id", "block")
-      .format("parquet")
-      .saveAsTable(table)
-  }
+  /** Append one micro-batch as encoded blocks, in the table's time
+    * unit (not a caller guess). A (series, day) split across
+    * micro-batches lands MULTIPLE blobs under one block key — m3db's
+    * pre-compaction block versions; [[readDecoded]] decodes and
+    * unions all of them, [[compact]] folds each key back to one
+    * blob. */
+  def appendBatch(batch: DataFrame, table: String, buckets: Int = 8): Unit =
+    Warehouse.append(blockFrame(batch, tableUnit(batch.sparkSession, table)),
+      table, layout(buckets))
 
   /** Continuous ingest — m3db's commit-log → flush path over
     * Structured Streaming: each micro-batch encodes and appends its
     * blocks (exactly-once per batch under the checkpoint). */
   def streamWrite(samples: DataFrame, table: String, checkpoint: String,
                   buckets: Int = 8): org.apache.spark.sql.streaming.StreamingQuery =
-    samples.writeStream
-      .option("checkpointLocation", checkpoint)
-      .outputMode("append")
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        appendBatch(batch, table, buckets)
-      }
-      .start()
+    Warehouse.stream(samples, checkpoint)(appendBatch(_, table, buckets))
 
-  /** Background compaction (m3db src/dbnode/storage/compaction,
+  /** Background compaction (m3db's dbnode storage/compaction,
     * restated for blocks): decode every blob of each (series, block)
     * key, merge the points in time order, re-encode to exactly ONE
-    * blob. Same-timestamp points from different blobs merge in
-    * (ts, value) order — the point SET is preserved exactly; only
-    * the intra-second byte order may differ from the batch path.
-    * localCheckpoint snapshots the merge so the table being read can
-    * be overwritten. */
+    * blob, and rewrite the table through [[Warehouse.rewrite]].
+    * Same-timestamp points from different blobs merge in (ts, value)
+    * order — the point SET is preserved exactly; only the
+    * intra-second byte order may differ from the batch path. */
   def compact(spark: SparkSession, table: String, buckets: Int = 8): Unit = {
     import spark.implicits._
-    // appends committed through another session (a streaming query's
-    // foreachBatch) are missing from this session's cached listing,
-    // and the whole-table overwrite below would silently drop them.
-    // Re-list in place (not catalog.refreshTable): frames already
-    // holding the cached relation then keep seeing the rewritten table
-    spark.table(table).queryExecution.analyzed.refresh()
     val unit = tableUnit(spark, table)
-    val merged = spark.table(table)
-      .select(col("name"), col("user_id"), col("block"), col("n"),
-        col("blk"))
-      .as[(String, Long, Long, Int, Array[Byte])]
-      .groupByKey(t => (t._1, t._2, t._3))
-      .mapGroups { (key: (String, Long, Long),
-                    it: Iterator[(String, Long, Long, Int, Array[Byte])]) =>
-        val pts = it.flatMap(t => Tsz.decodeBlock(t._5, t._4, unit))
-          .toArray.sortBy(p => (p._1, p._2))
-        val (bytes, tsBits, valBits) = Tsz.encodeBlock(pts, unit)
-        (key._1, key._2, key._3, pts.length, tsBits, valBits, bytes)
-      }
-      .toDF("name", "user_id", "block", "n", "ts_bits", "val_bits", "blk")
-      .materialize(true)
-    val cols = spark.table(table).columns
-    merged.repartition(buckets, col("name"), col("user_id"))
-      .select(cols.map(col): _*)
-      .write.mode("overwrite").insertInto(table)
+    Warehouse.rewrite(spark, table, layout(buckets)) { blocks =>
+      blocks.select(col("name"), col("user_id"), col("block"), col("n"),
+          col("blk"))
+        .as[(String, Long, Long, Int, Array[Byte])]
+        .groupByKey(t => (t._1, t._2, t._3))
+        .mapGroups { (key: (String, Long, Long),
+                      it: Iterator[(String, Long, Long, Int, Array[Byte])]) =>
+          val pts = it.flatMap(t => Tsz.decodeBlock(t._5, t._4, unit))
+            .toArray.sortBy(p => (p._1, p._2))
+          val (bytes, tsBits, valBits) = Tsz.encodeBlock(pts, unit)
+          (key._1, key._2, key._3, pts.length, tsBits, valBits, bytes)
+        }
+        .toDF("name", "user_id", "block", "n", "ts_bits", "val_bits", "blk")
+    }
   }
 
   /** Decode the stored blocks back to a sample frame
@@ -985,12 +912,7 @@ object TszStore {
                   fromBlock: Option[Long] = None,
                   untilBlock: Option[Long] = None): DataFrame = {
     import spark.implicits._
-    // the scheme rides with the table (write() stamps it); absent
-    // property = the pre-r12 Microsecond default
-    val unit = TszTimeUnit.of(spark.sessionState.catalog
-      .getTableMetadata(
-        org.apache.spark.sql.catalyst.TableIdentifier(table))
-      .properties.getOrElse(TimeUnitProp, TszTimeUnit.Microsecond.name))
+    val unit = tableUnit(spark, table)
     val t = spark.table(table)
     val bounded = Seq(
       fromBlock.map(b => col("block") >= b),

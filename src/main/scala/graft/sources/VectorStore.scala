@@ -1,7 +1,5 @@
 package graft.sources
 
-import graft.Materialize.MatOps
-
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.pipeline.Similarity
@@ -48,13 +46,8 @@ object VectorStore {
   private val PropKs = "graft.vec.ks"
   private val PropCells = "graft.vec.cells"
 
-  private def dropTable(spark: SparkSession, table: String): Unit = {
-    spark.sql(s"DROP TABLE IF EXISTS `$table`")
-    val loc = new org.apache.hadoop.fs.Path(
-      spark.conf.get("spark.sql.warehouse.dir"), table)
-    val fs = loc.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (fs.exists(loc)) fs.delete(loc, true)
-  }
+  /** `cell=` partitions: the probe prunes to the probed cells. */
+  private val CellLayout = Warehouse.Layout(partitionBy = Seq("cell"))
 
   /** Build the index: assign every vector its coarse cell, PQ-encode
     * its residual, and write `(vec_id, embedding, codes)` partitioned
@@ -66,7 +59,6 @@ object VectorStore {
             dim: Int = 64, m: Int = 8, ks: Int = 32): Unit = {
     val spark = emb.sparkSession
     val sub = dim / m
-    dropTable(spark, table); dropTable(spark, table + "_model")
     val cents = Similarity.seedCentroids(emb, cells)
     val centsDf = Similarity.centroidFrame(spark, cents)
     val cb = Similarity.residualFrame(emb, cents, centsDf)
@@ -82,26 +74,22 @@ object VectorStore {
       .groupBy("c_id")
       .agg(transform(array_sort(collect_list(struct(col("j"), col("code")))),
         x => x("code")).as("codes"))
-    emb.select(col("vec_id"), col("embedding"),
-        Similarity.cellAssign(cents)(col("embedding")).as("cell"))
-      .join(codesArr.withColumnRenamed("c_id", "vec_id"), Seq("vec_id"))
-      .repartition(col("cell"))
-      .write.mode("overwrite")
-      .partitionBy("cell")
-      .format("parquet")
-      .saveAsTable(table)
-    spark.sql(s"ALTER TABLE `$table` SET TBLPROPERTIES(" +
-      s"'$PropDim'='$dim', '$PropM'='$m', '$PropKs'='$ks', " +
-      s"'$PropCells'='$cells')")
+    Warehouse.create(
+      emb.select(col("vec_id"), col("embedding"),
+          Similarity.cellAssign(cents)(col("embedding")).as("cell"))
+        .join(codesArr.withColumnRenamed("c_id", "vec_id"), Seq("vec_id"))
+        .repartition(col("cell")),
+      table, CellLayout,
+      Map(PropDim -> dim, PropM -> m, PropKs -> ks, PropCells -> cells))
     // model sidecar: centroids (j = -1, idx = cell) + codebook rows
     // (idx = codeword); doubles round-trip parquet bit-exactly
-    centsDf.select(lit("centroid").as("kind"), col("cell").as("idx"),
-        lit(-1).as("j"), col("cemb").as("w"))
-      .unionByName(bdf.select(lit("codeword").as("kind"),
-        col("c").as("idx"), col("j"), col("w")))
-      .coalesce(1)
-      .write.mode("overwrite").format("parquet")
-      .saveAsTable(table + "_model")
+    Warehouse.create(
+      centsDf.select(lit("centroid").as("kind"), col("cell").as("idx"),
+          lit(-1).as("j"), col("cemb").as("w"))
+        .unionByName(bdf.select(lit("codeword").as("kind"),
+          col("c").as("idx"), col("j"), col("w")))
+        .coalesce(1),
+      table + "_model", Warehouse.Layout())
   }
 
   /** Collect the persisted centroids back (bounded: cells·dim). */
@@ -114,9 +102,7 @@ object VectorStore {
 
   private def tableProp(spark: SparkSession, table: String,
                         key: String): Int =
-    spark.sessionState.catalog
-      .getTableMetadata(org.apache.spark.sql.catalyst.TableIdentifier(table))
-      .properties(key).toInt
+    Warehouse.properties(spark, table)(key).toInt
 
   /** The distinct probed-cell set for a query frame — AT MOST `cells`
     * values regardless of query count, so collecting it is bounded
@@ -155,44 +141,24 @@ object VectorStore {
       .groupBy("c_id")
       .agg(transform(array_sort(collect_list(struct(col("j"), col("code")))),
         x => x("code")).as("codes"))
-    val cols = spark.table(table).columns // insertInto is positional
-    batch.select(col("vec_id"), col("embedding"),
-        Similarity.cellAssign(cents)(col("embedding")).as("cell"))
-      .join(codesArr.withColumnRenamed("c_id", "vec_id"), Seq("vec_id"))
-      .repartition(col("cell"))
-      .select(cols.map(col): _*)
-      .write.mode("append")
-      .format("parquet")
-      .insertInto(table)
+    Warehouse.append(
+      batch.select(col("vec_id"), col("embedding"),
+          Similarity.cellAssign(cents)(col("embedding")).as("cell"))
+        .join(codesArr.withColumnRenamed("c_id", "vec_id"), Seq("vec_id"))
+        .repartition(col("cell")),
+      table, CellLayout)
   }
 
   /** Compact the index in place — the vector twin of
     * [[SeriesStore.compact]]: every [[appendBatch]] lands one file
     * per written cell per batch, so a long-running ingest fragments
     * the cell partitions into small files whose open/footer cost
-    * erodes the pruned read. Snapshot (localCheckpoint truncates the
-    * lineage so Spark allows overwriting the table being read),
-    * repartition by cell — one task holds one cell's rows, writes
-    * one file — and dynamic-overwrite only the touched partitions.
-    * Row set byte-identical; searches keep their pruned plans. */
-  def compact(spark: SparkSession, table: String): Unit = {
-    val snap = spark.table(table).materialize(true)
-    val prev = spark.conf.getOption("spark.sql.sources.partitionOverwriteMode")
-    spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-    try {
-      val cols = spark.table(table).columns // insertInto is positional
-      snap.repartition(col("cell"))
-        .select(cols.map(col): _*)
-        .write.mode("overwrite").insertInto(table)
-    } finally {
-      prev match {
-        case Some(v) =>
-          spark.conf.set("spark.sql.sources.partitionOverwriteMode", v)
-        case None =>
-          spark.conf.unset("spark.sql.sources.partitionOverwriteMode")
-      }
-    }
-  }
+    * erodes the pruned read. [[Warehouse.rewrite]] repartitions by
+    * cell — one task holds one cell's rows, writes one file — and
+    * dynamic-overwrites only the touched partitions. Row set
+    * byte-identical; searches keep their pruned plans. */
+  def compact(spark: SparkSession, table: String): Unit =
+    Warehouse.rewrite(spark, table, CellLayout)(identity)
 
   /** Continuous vector ingest into the index — Structured Streaming
     * micro-batches through [[appendBatch]] (exactly-once per batch
@@ -200,13 +166,7 @@ object VectorStore {
     * [[SeriesStore.streamWrite]]. */
   def streamWrite(vectors: DataFrame, table: String,
                   checkpoint: String): org.apache.spark.sql.streaming.StreamingQuery =
-    vectors.writeStream
-      .option("checkpointLocation", checkpoint)
-      .outputMode("append")
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        appendBatch(batch, table)
-      }
-      .start()
+    Warehouse.stream(vectors, checkpoint)(appendBatch(_, table))
 
   /** IVF search over the stored layout: probe cells → pruned
     * partition read → exact cosine rerank. Byte-identical to

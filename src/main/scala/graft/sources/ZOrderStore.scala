@@ -83,30 +83,18 @@ object ZOrderStore {
   /** Write events as a zcell-partitioned table; extents recorded as
     * table properties. Idempotent like [[SeriesStore.write]]. */
   def write(events: DataFrame, table: String, layout: Layout): Unit = {
-    val spark = events.sparkSession
-    spark.sql(s"DROP TABLE IF EXISTS `$table`")
-    val loc = new org.apache.hadoop.fs.Path(
-      spark.conf.get("spark.sql.warehouse.dir"), table)
-    val fs = loc.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (fs.exists(loc)) fs.delete(loc, true)
-    events
-      .withColumn("zcell", zcellCol(layout))
-      .sortWithinPartitions("zcell", "ts")
-      .write.mode("overwrite")
-      .partitionBy("zcell")
-      .format("parquet")
-      .saveAsTable(table)
     val vals = Seq(layout.bits.toLong, layout.minDay, layout.maxDay,
       layout.minUser, layout.maxUser)
-    spark.sql(s"ALTER TABLE `$table` SET TBLPROPERTIES(" +
-      Props.zip(vals).map { case (k, v) => s"'$k'='$v'" }.mkString(",") + ")")
+    Warehouse.create(
+      events.withColumn("zcell", zcellCol(layout))
+        .sortWithinPartitions("zcell", "ts"),
+      table, Warehouse.Layout(partitionBy = Seq("zcell")),
+      Props.zip(vals).toMap)
   }
 
   /** Layout back from the catalog — readers never touch data. */
   def layoutOf(spark: SparkSession, table: String): Layout = {
-    val p = spark.sessionState.catalog
-      .getTableMetadata(org.apache.spark.sql.catalyst.TableIdentifier(table))
-      .properties
+    val p = Warehouse.properties(spark, table)
     val Seq(bits, mnd, mxd, mnu, mxu) = Props.map(k => p(k).toLong)
     Layout(bits.toInt, mnd, mxd, mnu, mxu)
   }

@@ -190,27 +190,20 @@ object Index {
     * like m3ninx seals per-block segments. */
   def writeBlockSegments(samples: DataFrame, table: String,
                          labelCols: Seq[String]): Unit = {
-    val spark = samples.sparkSession
-    spark.sql(s"DROP TABLE IF EXISTS `$table`")
-    val loc = new org.apache.hadoop.fs.Path(
-      spark.conf.get("spark.sql.warehouse.dir"), table)
-    val fs = loc.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (fs.exists(loc)) fs.delete(loc, true)
     val block = floor(unix_timestamp(col("ts")).cast("double") / 86400.0)
       .cast("long")
     val seg = samples.withColumn("block", block)
       .select(labelCols.map(c => col(c).cast("string").as(c)) :+
         col("block"): _*)
       .distinct()
-    labelCols.map { l =>
-      // NULL terms never enter a segment (same rule as postings())
-      seg.where(col(l).isNotNull)
-        .select(lit(l).as("label"), col(l).as("value"),
-          struct(labelCols.map(col): _*).as("sid"), col("block"))
-    }.reduce(_ unionByName _)
-      .write.mode("overwrite").format("parquet")
-      .partitionBy("block")
-      .saveAsTable(table)
+    graft.sources.Warehouse.create(
+      labelCols.map { l =>
+        // NULL terms never enter a segment (same rule as postings())
+        seg.where(col(l).isNotNull)
+          .select(lit(l).as("label"), col(l).as("value"),
+            struct(labelCols.map(col): _*).as("sid"), col("block"))
+      }.reduce(_ unionByName _),
+      table, graft.sources.Warehouse.Layout(partitionBy = Seq("block")))
   }
 
   /** Time-bounded matcher resolution over the block-segmented

@@ -1,6 +1,7 @@
 package graft
 
 import org.scalatest.funsuite.AnyFunSuite
+import scala.jdk.CollectionConverters._
 
 /** Driver-contract guards: the invariants the correctness gate
   * depends on, enforced at test time so a future query cannot land
@@ -33,6 +34,30 @@ class ContractSpec extends AnyFunSuite {
     val undeclared = SparkEntry.queries.keySet -- declared
     assert(undeclared.isEmpty,
       s"queries missing a SURVEY §2 bullet: $undeclared")
+  }
+
+  test("the catalog-table lifecycle stays behind sources.Warehouse") {
+    // table properties, dynamic overwrite and warehouse locations are
+    // lifecycle details: a store restating them drifts from the
+    // shared create/append/rewrite order (a compaction that skips the
+    // re-list loses other sessions' appends)
+    val owner = java.nio.file.Paths.get("src/main/scala/graft/sources/Warehouse.scala")
+    val sessions = java.nio.file.Paths.get("src/main/scala/graft/Sessions.scala")
+    val banned = Seq("getTableMetadata", "SET TBLPROPERTIES",
+      "partitionOverwriteMode", "spark.sql.warehouse.dir")
+    val files = java.nio.file.Files.walk(java.nio.file.Paths.get("src/main/scala"))
+    val offenders = try {
+      files.iterator().asScala.filter(_.toString.endsWith(".scala"))
+        .filterNot(_ == owner).toSeq.flatMap { f =>
+          val text = new String(java.nio.file.Files.readAllBytes(f),
+            java.nio.charset.StandardCharsets.UTF_8)
+          banned.filter(text.contains)
+            .filterNot(b => f == sessions && b == "spark.sql.warehouse.dir")
+            .map(b => s"$f: $b")
+        }
+    } finally files.close()
+    assert(owner.toFile.isFile, s"$owner moved: update this guard")
+    assert(offenders.isEmpty, s"lifecycle code outside Warehouse: $offenders")
   }
 
   test("query names are registry-unique across the four modules") {

@@ -153,6 +153,31 @@ class ProtoSpec extends SparkSpec {
       "compaction changed the message set")
   }
 
+  test("compaction keeps appends committed through another session") {
+    // a streaming query's foreachBatch appends through its own
+    // session, leaving this session's cached file listing stale: the
+    // compaction must fold what is committed, not that listing
+    val t = "graft_proto_other_session"
+    spark.sql(s"DROP TABLE IF EXISTS `$t`")
+    val base = java.sql.Timestamp.valueOf("2024-05-01 00:00:00").getTime / 1000
+    def msgs(s: org.apache.spark.sql.SparkSession, from: Long, until: Long) =
+      s.range(from, until).select(
+        concat(lit("m"), (col("id") % 3).cast("string")).as("name"),
+        (col("id") % 3).as("user_id"),
+        timestamp_seconds(lit(base) + col("id") * 60).as("ts"),
+        col("id").as("event_id"),
+        (col("id") % 97).cast("double").as("amount"),
+        (col("id") % 7).as("qty"),
+        concat(lit("q"), (col("id") % 4).cast("string")).as("label"),
+        (col("id") % 5 === 0).as("flag"))
+    ProtoStore.appendBatch(msgs(spark, 0, 500), t)
+    assert(ProtoStore.decode(spark.table(t)).count() == 500) // lists the table
+    ProtoStore.appendBatch(msgs(spark.newSession(), 500, 1000), t)
+    ProtoStore.compact(spark, t)
+    assert(ProtoStore.decode(spark.newSession().table(t)).count() == 1000,
+      "compaction dropped messages appended through another session")
+  }
+
   test("store blocks round-trip the sf message stream") {
     val msgs = sfMsgs
     val back = ProtoStore.decode(ProtoStore.blockFrame(msgs))

@@ -6,8 +6,9 @@ import graft.sources.SketchStore
 
 class SketchStoreSpec extends SparkSpec {
 
-  private def corpus = {
-    val s = spark
+  private def corpus = corpusIn(spark)
+
+  private def corpusIn(s: org.apache.spark.sql.SparkSession) = {
     import s.implicits._
     (0 until 40).map { i =>
       (i.toLong, s"src${i % 2}",
@@ -44,6 +45,27 @@ class SketchStoreSpec extends SparkSpec {
     val after = SketchStore.estimate(spark, t, docs)
       .collect().map(_.toSeq)
     assert(after.toSeq == before.toSeq)
+  }
+
+  test("compaction keeps appends committed through another session") {
+    // see StoreSpec's test of the same name: registers appended by a
+    // foreachBatch writer's own session must survive a compaction run
+    // from this session, whose cached listing predates them
+    val t = "graft_hll_other_session"
+    val docs = corpus
+    SketchStore.build(docs.where(col("doc_id") < 20), t)
+    assert(SketchStore.registers(spark, t).count() > 0) // lists the table
+    SketchStore.append(corpusIn(spark.newSession()).where(col("doc_id") >= 20), t)
+    SketchStore.compact(spark, t)
+    def regs(df: org.apache.spark.sql.DataFrame) = df.collect()
+      .map(r => (r.getAs[String]("source"), r.getAs[Int]("idx")) -> r.get(r.fieldIndex("mj")))
+      .toMap
+    val expect = regs(Sketches.hllRegisters(docs))
+    val got = regs(SketchStore.registers(spark.newSession(), t))
+    val kept = expect.count { case (k, v) => got.get(k).contains(v) }
+    assert(kept == expect.size && got.size == expect.size,
+      s"compaction kept $kept of ${expect.size} merged registers " +
+        "after appends through another session")
   }
 
   test("per-source reads prune source partitions") {

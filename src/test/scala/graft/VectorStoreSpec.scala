@@ -155,6 +155,21 @@ class VectorStoreSpec extends SparkSpec {
     assert(perCell.nonEmpty && perCell.forall(_._2 == 1), perCell.toSeq.toString)
   }
 
+  test("compaction keeps appends committed through another session") {
+    // see StoreSpec's test of the same name: a foreachBatch writer
+    // appends through its own session, and compacting from this one
+    // must not overwrite the cells from a stale listing
+    val t = "graft_vec_other_session"
+    VectorStore.build(emb.where(col("vec_id") % 2 === 0), t)
+    val built = spark.table(t).count() // lists the cells
+    VectorStore.appendBatch(
+      Tables.embeddings(spark.newSession(), sf).where(col("vec_id") % 2 === 1), t)
+    VectorStore.compact(spark, t)
+    assert(built < emb.count())
+    assert(spark.newSession().table(t).count() == emb.count(),
+      "compaction dropped vectors appended through another session")
+  }
+
   test("the model sidecar is the bounded build artifact") {
     val mdl = spark.table(table + "_model")
     assert(mdl.where(col("kind") === "centroid").count() == 8)
